@@ -9,13 +9,13 @@ import graft.SparkEntry
 
 /** JVM side of the benchmark; `perfbench/run.py` starts it.
   *
-  * `--mode prime` runs each query once, so that run.py can archive the
-  * loaded classes; `--mode pin` is described at [[pin]].
+  * `--mode prime` only sets up, so that run.py can archive the classes
+  * set-up loads; `--mode pin` is described at [[pin]].
   * `--mode run` drives the workload: a closed loop with one client
   * and one query at a time, through the public driver contract
   * (`SparkEntry.queries(name)(spark, dir)` and a noop write). Pass 0 runs
   * every query on fresh plans; an untimed check pass hashes every result;
-  * warm passes then repeat until `--seconds` have been measured. The seed
+  * then `--passes` warm passes are measured. The seed
   * only permutes the query order of each pass.
   *
   * With `--trace 1` the run records spans and layer counters through
@@ -56,11 +56,17 @@ object Main {
     finally src.close()
   }
 
-  private def peakRssMb(): Double = {
+  /** Peak resident memory outside the Java heap: VmHWM less the heap,
+    * which run.py fixes in size and pre-touches, so it is resident from
+    * the start and the same in every run.
+    */
+  private def nonheapPeakMb(): Double = {
     val src = scala.io.Source.fromFile("/proc/self/status")
-    try src.getLines().find(_.startsWith("VmHWM:"))
-      .map(_.split("\\s+")(1).toDouble / 1024.0).getOrElse(Double.NaN)
+    val hwm = try src.getLines().find(_.startsWith("VmHWM:"))
+      .map(_.split("\\s+")(1).toDouble * 1024).getOrElse(Double.NaN)
     finally src.close()
+    val heap = java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getCommitted
+    (hwm - heap) / (1024 * 1024)
   }
 
   def main(args: Array[String]): Unit = {
@@ -77,30 +83,11 @@ object Main {
     if (opt("mode") != "run") {
       try opt("mode") match {
         case "pin" => pin(spark, opt, dataDir)
-        case "prime" => opt("queries").split(",").foreach { q =>
-          SparkEntry.queries(q)(spark, dataDir).write.format("noop").mode("overwrite").save()
-          spark.catalog.clearCache()
-        }
+        case "prime" => ()
       } finally spark.stop()
       return
     }
-    val record = try drive(spark, opt, cores, dataDir)
-      catch { case e: Throwable => spark.stop(); throw e }
-    // Set-up is timed five times per run: the first from JVM start
-    // (run.py times it), four more by stopping the session and building
-    // and warming a new one in this JVM.
-    var current = spark
-    val again = (1 to 4).map { _ =>
-      current.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      val t0 = System.nanoTime()
-      current = session(cores, s"$workDir/spark-local")
-      warm(current, dataDir)
-      (System.nanoTime() - t0) / 1e9
-    }
-    current.stop()
-    record("resetup_s") = again
+    val record = try drive(spark, opt, cores, dataDir) finally spark.stop()
     println("PB_RESULT " + Stats.json(record))
     Console.out.flush()
   }
@@ -131,12 +118,13 @@ object Main {
                     dataDir: String): mutable.LinkedHashMap[String, Any] = {
     val queries = opt("queries").split(",").toSeq
     val seed = opt("seed").toLong
-    val seconds = opt("seconds").toDouble
+    val warmPasses = opt("passes").toInt
     val traced = opt("trace") == "1"
     val expected = readExpected(opt("expected"))
     val fns = queries.map(q => q -> SparkEntry.queries(q)).toMap
     val sc = spark.sparkContext
     val rnd = new java.util.Random(seed)
+    val heap = new HeapMeter
 
     val recorder = if (traced) Some(new Recorder) else None
     recorder.foreach(_.register(spark))
@@ -186,7 +174,7 @@ object Main {
 
     // Pass 0 runs on fresh plans. The check pass then hashes every
     // result, untimed; it also takes the steepest part of the JIT warm-up
-    // off the measured passes, which follow for --seconds.
+    // off the measured passes, which follow.
     runPass(0)
     order().foreach { q =>
       sc.setJobGroup(s"pb|check|$q|check", q, interruptOnCancel = false)
@@ -196,12 +184,15 @@ object Main {
       spark.catalog.clearCache()
     }
     val warmStart = Clock.nowMs
+    val allocStart = heap.allocated()
     var pass = 1
-    while (pass <= 2 || Clock.nowMs - warmStart < seconds * 1000) {
+    while (pass <= warmPasses) {
       runPass(pass)
       pass += 1
     }
     val warmEnd = Clock.nowMs
+    val allocWarm = heap.allocated() - allocStart
+    heap.close()
     val lastTracedPass = pass - 1
 
     // Tracing overhead: warm passes again with the listeners removed.
@@ -251,7 +242,8 @@ object Main {
       "pass_s" -> (passS, "s"),
       "query_p50_s" -> (Stats.quantile(latencies, 0.5), "s"),
       "query_p90_s" -> (Stats.quantile(latencies, 0.9), "s"),
-      "peak_rss_mb" -> (peakRssMb(), "MB"))
+      "nonheap_peak_mb" -> (nonheapPeakMb(), "MB"),
+      "alloc_mb_per_pass" -> (allocWarm / (1024.0 * 1024.0) / warmPassWalls.size, "MB"))
 
     val info = mutable.LinkedHashMap[String, Any](
       "warm_passes" -> warmPassWalls.size,
